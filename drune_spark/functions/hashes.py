@@ -63,16 +63,6 @@ def rolling_min_fingerprint(col: Column, k: int = 8) -> Column:
     return F.array_min(hashes)
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """Non-negative 32-bit hash per shingle (xxhash64 folded into [0, 2^32)).
-
-    32 bits keeps the MinHash permutation ``a*x + b`` (a, b < 2^31) under
-    2^63 — no 64-bit overflow — while leaving collision probability
-    negligible for dedup purposes.
-    """
-    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 32)))
-
-
 def md5_u32(col: Column) -> Column:
     """Portable 32-bit content hash: the first 8 hex chars of md5 parsed
     as an unsigned int. Identical in any engine with md5 + base
@@ -145,7 +135,3 @@ def simhash64(tokens_col: Column) -> Column:
         )
         result = result + F.when(votes > 0, mask).otherwise(F.lit(0).cast("long"))
     return result
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))

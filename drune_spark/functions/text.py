@@ -251,10 +251,3 @@ def top_ngram_char_frac(toks: Column, n: int) -> Column:
     return top_ngram_char_frac_of(
         word_ngrams(toks, n), token_char_count(toks), n - 1
     )
-
-
-def dup_ngram_char_frac(toks: Column, n: int) -> Column:
-    """Convenience form — see ``top_ngram_char_frac``."""
-    return dup_ngram_char_frac_of(
-        word_ngrams(toks, n), token_char_count(toks), n - 1
-    )

@@ -107,13 +107,3 @@ def norm(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    diff = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v))
-
-
-def l2_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.transform(a, lambda x: x / n)

@@ -40,23 +40,65 @@ class DedupStep(Step):
         return exact_dedup_rows(df, text_col, id_col)
 
 
+def _filter_above(df: DataFrame, cond) -> DataFrame:
+    """``df.filter(cond)``, pinned ABOVE ``df``'s top projection.
+
+    PushPredicateThroughNonJoin substitutes a projection's aliases back
+    into the filter whenever every projected field is deterministic —
+    even for a nondeterministic or CaseWhen-wrapped condition (both
+    probed, r10) — and keeps pushing it down through Repartition, so a
+    ``fan_out`` frame's filter lands in the single-split scan stage.
+    There FilterExec codegen has no subexpression elimination: the
+    inlined condition re-runs every alias it names once per reference
+    (token_screen: ~35 split() per row; quality_filter: the upstream
+    redaction regexes inside every element_at of the gram lambdas,
+    O(tokens²) per doc, on one core). A nondeterministic PROJECTED
+    field (__pin, referenced by the filter so column pruning keeps it)
+    blocks the push entirely: the filter stays above the projection,
+    reads the aliases as attributes, and ProjectExec evaluates each
+    ONCE per row after the widening. __pin >= 0 is always true
+    (monotonically_increasing_id is nonnegative by construction): adds
+    no rows, drops no rows, never reaches the output."""
+    pinned = df.withColumn("__pin", F.monotonically_increasing_id())
+    return pinned.filter(cond & (F.col("__pin") >= 0)).drop("__pin")
+
+
 @StepRegistry.register("quality_filter")
 class QualityFilterStep(Step):
     """Gopher-style repetition/shape gate. ``keep_only`` (default true)
-    returns the retained rows of the ORIGINAL frame; false returns the
-    per-doc metric profile with the keep flag for auditing."""
+    returns the retained rows of the input frame, with its columns in
+    order; false returns the per-doc metric profile (gopher_filter)
+    with the keep flag for auditing.
+
+    Each row is judged on its own text: a failing row is dropped even
+    when another row with the same id passes, and rows with a NULL id
+    or NULL text are dropped. The input is read once: the metrics are
+    computed on the ``fan_out`` widening of the whole row and the keep
+    filter is pinned above them (``_filter_above``). Semi-joining the
+    surviving ids back onto the input would scan it twice."""
 
     def execute(self, inputs, current, *, text_col: str, id_col: str,
                 keep_only: bool = True, source: Optional[str] = None,
                 **params: Any) -> DataFrame:
-        from drune_spark.operators.text_analysis import gopher_filter
+        from drune_spark.functions.partitioning import fan_out
+        from drune_spark.operators.text_analysis import (
+            _gopher_scored,
+            gopher_filter,
+        )
 
         df = self.pick_input(inputs, current, source)
-        flags = gopher_filter(df, text_col, id_col, **params)
         if not keep_only:
-            return flags
-        keep_ids = flags.filter(F.col("keep")).select(id_col)
-        return df.join(keep_ids, id_col, "left_semi")
+            return gopher_filter(df, text_col, id_col, **params)
+        # Positional names keep the carried row clear of the metric
+        # columns (n_tokens, keep, ...) whatever the input calls its own.
+        names = {c: f"__qf{i}" for i, c in enumerate(df.columns)}
+        wide = fan_out(df).select(
+            *[F.col(c).alias(n) for c, n in names.items()])
+        scored = _gopher_scored(wide, names[text_col],
+                                list(names.values()), **params)
+        kept = _filter_above(
+            scored, F.col("keep") & F.col(names[id_col]).isNotNull())
+        return kept.select(*[F.col(n).alias(c) for c, n in names.items()])
 
 
 @StepRegistry.register("redact")
@@ -206,12 +248,7 @@ class TokenScreenStep(Step):
     Plan shape (r10): the token split and stopword counts live in a
     PROJECT list (where whole-stage codegen applies subexpression
     elimination — split(trim(lower(text))) is evaluated ONCE per row),
-    and the filter is pinned ABOVE that projection with an always-true
-    nondeterministic conjunct. Without the pin, predicate pushdown
-    inlines the aliases into a single Filter condition, where codegen
-    does NOT eliminate common subexpressions — the screen then
-    re-evaluates the whole tokenize once per stopword term per bound
-    (measured ~35 split() evaluations per row at the gate)."""
+    and the filter is pinned ABOVE that projection (``_filter_above``)."""
 
     def execute(
         self,
@@ -234,32 +271,14 @@ class TokenScreenStep(Step):
         for w in STOPWORDS:
             term = n - F.size(F.array_remove(toks, w))
             hits = term if hits is None else hits + term
-        # Value-preserving pushdown pin (r10): PushPredicateThroughNonJoin
-        # substitutes the __hits/__n aliases back into the filter whenever
-        # every projected field is deterministic — even for a
-        # nondeterministic or CaseWhen-wrapped condition (both probed) —
-        # and the inlined Filter re-evaluates split() ~35x per row
-        # because FilterExec codegen has no subexpression elimination.
-        # A nondeterministic PROJECTED field (__pin, referenced by the
-        # filter so column pruning keeps it) blocks the push entirely:
-        # the filter stays ABOVE the projection, references __hits/__n
-        # as attributes, and ProjectExec codegen CSE evaluates the
-        # tokenize ONCE per row. __pin >= 0 is always true
-        # (monotonically_increasing_id is nonnegative by construction):
-        # adds no rows, drops no rows, never reaches the output.
-        df2 = (
-            df.withColumn("__hits", hits)
-            .withColumn("__n", n)
-            .withColumn("__pin", F.monotonically_increasing_id())
-        )
+        df2 = df.withColumn("__hits", hits).withColumn("__n", n)
         sw = F.expr("(CAST(__hits AS BIGINT) * 1000) div __n")
         cond = (
             (F.col("__n") >= int(min_tokens))
             & (sw >= int(sw_lo_milli))
             & (sw <= int(sw_hi_milli))
-            & (F.col("__pin") >= 0)
         )
-        return df2.filter(cond).drop("__hits", "__n", "__pin")
+        return _filter_above(df2, cond).drop("__hits", "__n")
 
 
 @StepRegistry.register("fim")

@@ -66,34 +66,15 @@ def repetition_profile(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     reimagined as Spark column arithmetic (no counterpart in
     /root/reference — driver-mandated LLM-data extension).
     """
+    from drune_spark.functions.partitioning import fan_out
     from drune_spark.functions.text import (
         dup_ngram_char_frac_of,
         dup_token_frac,
-        token_char_count,
-        token_count,
-        tokens,
         top_ngram_char_frac_of,
-        word_ngrams,
     )
-    from drune_spark.functions.partitioning import fan_out
 
-    # Interpreted-HOF work is CPU-bound per row: widen single-split
-    # inputs first (on a real cluster parallelism comes from file
-    # splits; locally one parquet file = one task).
-    t = F.col(text_col)
-    staged = fan_out(df.select(F.col(id_col), t)).select(
-        F.col(id_col),
-        token_count(t).alias("n_tokens"),
-        tokens(t).alias("__w"),
-    ).select(
-        # second stage: gram arrays built ONCE per row (CollapseProject
-        # never inlines expensive multi-referenced aliases)
-        F.col(id_col),
-        "n_tokens",
-        "__w",
-        token_char_count(F.col("__w")).alias("__chars"),
-        word_ngrams(F.col("__w"), 2).alias("__g2"),
-        word_ngrams(F.col("__w"), 3).alias("__g3"),
+    staged = _gram_stages(
+        fan_out(df.select(F.col(id_col), F.col(text_col))), text_col, [id_col]
     )
     w, chars = F.col("__w"), F.col("__chars")
     return staged.select(
@@ -109,10 +90,42 @@ def repetition_profile(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def gopher_filter(
+def _gram_stages(df: DataFrame, text_col: str, carry: list[str]) -> DataFrame:
+    """The two staged selects behind the Gopher metrics: ``carry``
+    passes through, then n_tokens and the token array ``__w``, then the
+    token-char total and the 2-/3-gram arrays, each built ONCE per row
+    (CollapseProject never inlines expensive multi-referenced aliases).
+    Callers widen single-split inputs first (``fan_out``): the
+    interpreted-HOF work is CPU-bound per row, and on a real cluster
+    parallelism comes from file splits, locally one parquet file = one
+    task."""
+    from drune_spark.functions.text import (
+        token_char_count,
+        token_count,
+        tokens,
+        word_ngrams,
+    )
+
+    t = F.col(text_col)
+    carried = [F.col(c) for c in carry]
+    return df.select(
+        *carried,
+        token_count(t).alias("n_tokens"),
+        tokens(t).alias("__w"),
+    ).select(
+        *carried,
+        "n_tokens",
+        "__w",
+        token_char_count(F.col("__w")).alias("__chars"),
+        word_ngrams(F.col("__w"), 2).alias("__g2"),
+        word_ngrams(F.col("__w"), 3).alias("__g3"),
+    )
+
+
+def _gopher_scored(
     df: DataFrame,
     text_col: str,
-    id_col: str,
+    carry: list[str],
     min_tokens: int = 30,
     max_tokens: int = 100_000,
     min_avg_token_len: float = 2.0,
@@ -120,39 +133,20 @@ def gopher_filter(
     max_top_2gram_char_frac: float = 0.10,
     max_dup_3gram_char_frac: float = 0.60,
 ) -> DataFrame:
-    """Document-quality gate combining the repetition + shape heuristics:
-    returns (id, n_tokens, metrics..., keep). Filter on ``keep`` to get
-    the retained corpus; emitting the flag keeps both populations
-    auditable (and oracle-checkable). Staged narrow selects — no join,
-    no data-dependent shuffle (fan_out round-robins single-split inputs
-    for the CPU-bound gram folds; see repetition_profile)."""
+    """The body of ``gopher_filter`` with the passed-through columns
+    chosen by the caller: returns (carry..., n_tokens, metrics...,
+    keep). It does not widen ``df``; callers pass a ``fan_out`` frame.
+    ``carry`` must not name the metric columns."""
     from drune_spark.functions.text import (
         dup_ngram_char_frac_of,
         dup_token_frac,
-        token_char_count,
-        token_count,
-        tokens,
         top_ngram_char_frac_of,
-        word_ngrams,
     )
-    from drune_spark.functions.partitioning import fan_out
 
-    t = F.col(text_col)
-    staged = fan_out(df.select(F.col(id_col), t)).select(
-        F.col(id_col),
-        token_count(t).alias("n_tokens"),
-        tokens(t).alias("__w"),
-    ).select(
-        F.col(id_col),
-        "n_tokens",
-        "__w",
-        token_char_count(F.col("__w")).alias("__chars"),
-        word_ngrams(F.col("__w"), 2).alias("__g2"),
-        word_ngrams(F.col("__w"), 3).alias("__g3"),
-    )
+    staged = _gram_stages(df, text_col, carry)
     w, chars = F.col("__w"), F.col("__chars")
     out = staged.select(
-        F.col(id_col),
+        *[F.col(c) for c in carry],
         F.col("n_tokens"),
         F.when(
             F.col("n_tokens") > 0,
@@ -173,6 +167,26 @@ def gopher_filter(
         & (F.col("dup_3gram_char_frac") <= max_dup_3gram_char_frac)
     )
     return out.withColumn("keep", keep)
+
+
+def gopher_filter(
+    df: DataFrame, text_col: str, id_col: str, **thresholds
+) -> DataFrame:
+    """Document-quality gate combining the repetition + shape heuristics:
+    returns (id, n_tokens, metrics..., keep). Filter on ``keep`` to get
+    the retained corpus; emitting the flag keeps both populations
+    auditable (and oracle-checkable). Staged narrow selects — no join,
+    no data-dependent shuffle (fan_out round-robins single-split inputs
+    for the CPU-bound gram folds; see _gram_stages). ``thresholds`` are
+    ``_gopher_scored``'s keyword arguments (min_tokens 30, max_tokens
+    100k, avg token length in [2, 12], top-2gram char share <= 0.10,
+    duplicated-3gram char share <= 0.60)."""
+    from drune_spark.functions.partitioning import fan_out
+
+    return _gopher_scored(
+        fan_out(df.select(F.col(id_col), F.col(text_col))),
+        text_col, [id_col], **thresholds,
+    )
 
 
 def collocations(

@@ -819,6 +819,76 @@ class TestRepetition:
         assert "Exchange rangepartitioning" not in plan
 
 
+class TestQualityFilterStep:
+    """The quality_filter step reads its input once and scores each row
+    once, after the fan_out widening."""
+
+    @staticmethod
+    def _run(spark, steps, df):
+        import drune_spark.operators.llm_steps  # noqa: F401
+        from drune_spark.config.models import StepConfig
+        from drune_spark.operators.registry import StepRunner
+
+        return StepRunner(spark).run(
+            [StepConfig(name=n, type=t, params=p) for n, t, p in steps],
+            {"documents": df}, df,
+        )
+
+    def test_redact_quality_filter_plan_and_semi_join_parity(self, spark):
+        from drune_spark.operators.text_analysis import gopher_filter
+
+        docs = spark.read.parquet(
+            "/root/testdata/sf0.001/documents.parquet"
+        )
+        redact = ("scrub", "redact", {"text_col": "text"})
+        gate = ("gate", "quality_filter",
+                {"text_col": "text", "id_col": "doc_id"})
+        out = self._run(spark, [redact, gate], docs)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        lines = plan.splitlines()
+        assert "LeftSemi" not in plan
+        relations = [ln for ln in lines if "Relation [" in ln]
+        assert len(relations) == 1 and "parquet" in relations[0]
+        filters = [i for i, ln in enumerate(lines) if "Filter " in ln]
+        repart = [i for i, ln in enumerate(lines) if "Repartition" in ln]
+        assert filters and len(repart) == 1
+        for i in filters:
+            for fn in ("regexp_replace", "transform(", "aggregate("):
+                assert fn not in lines[i], lines[i]
+            assert i < repart[0]  # the Filter sits above the widening
+
+        # Rows equal the old shape: input rows whose id gopher_filter
+        # keeps (the left-semi join back on the id). Collected unfiltered
+        # so no filter is pushed into the scan.
+        red = self._run(spark, [redact], docs)
+        keep = {r.doc_id for r in gopher_filter(red, "text", "doc_id")
+                .select("doc_id", "keep").collect() if r.keep}
+        want = sorted(map(repr, (r for r in red.collect()
+                                 if r.doc_id in keep)))
+        assert out.columns == red.columns
+        assert sorted(map(repr, out.collect())) == want
+        assert 0 < len(want) < docs.count()
+
+    def test_each_row_judged_on_its_own_text(self, spark):
+        good = " ".join(f"word{i:02d}x" for i in range(40))
+        bad = " ".join(["spam"] * 40)
+        # n_tokens / keep are input columns here: they must pass through
+        # untouched next to the step's metric columns of the same names.
+        df = spark.createDataFrame(
+            [(1, good, 7, "a"), (1, bad, 8, "b"), (None, good, 9, "c"),
+             (2, None, 10, "d"), (3, good, 11, "e")],
+            "doc_id long, text string, n_tokens int, keep string",
+        )
+        gate = ("gate", "quality_filter",
+                {"text_col": "text", "id_col": "doc_id"})
+        out = self._run(spark, [gate], df)
+        assert out.columns == df.columns
+        # The failing row of id 1 goes although its twin passes; the
+        # NULL-id and NULL-text rows go.
+        assert sorted(tuple(r) for r in out.collect()) == [
+            (1, good, 7, "a"), (3, good, 11, "e")]
+
+
 class TestMultimodal:
     def test_extract_features_plumbing(self, spark):
         from drune_spark.operators.multimodal import (

@@ -385,6 +385,23 @@ class TestCorpusExamplePipeline:
         assert chunks.select("doc_id", "chunk_id").distinct().count() \
             == chunks.count()
 
+    def test_corpus_pipeline_job_count(self, spark, monkeypatch):
+        """redact → quality_filter → dedup → chunk runs in at most 4
+        Spark jobs: a semi-join back onto the quality_filter input adds
+        one. (A keep filter pushed into the scan stage does not change
+        the count; TestQualityFilterStep pins that plan shape.)"""
+        monkeypatch.chdir(REPO)
+        shutil.rmtree("/tmp/drune_spark_example_corpus", ignore_errors=True)
+        sc = spark.sparkContext
+        group = "corpus_pipeline_job_count"
+        sc.setJobGroup(group, "examples/project corpus pipeline")
+        try:
+            Project(PROJECT_DIR, spark=spark).pipeline("corpus").execute()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 0 < len(jobs) <= 4, sorted(jobs)
+
 
 class TestPretrainExamplePipeline:
     def test_cli_runs_span_corrupt_chain(self, spark, monkeypatch):
